@@ -1984,6 +1984,7 @@ def q_corpus_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmpl = f"/tmp/spark_graft_forget_{sf_tag}_tmpl"
     root = f"/tmp/spark_graft_forget_{sf_tag}_run"
     from restructure_hdfs_topic_spark.operators.bm25_index import (
+        _FP_SAMPLE_MOD,
         corpus_fingerprint,
     )
 
@@ -2015,8 +2016,10 @@ def q_corpus_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             **_stat_memo(
                 sf_dir,
                 "documents",
-                "fp_full_m101",
-                lambda: corpus_fingerprint(docs),
+                # Tag and computation share one sample rule, so the memo
+                # entry cannot drift from what it claims to hold.
+                f"fp_full_m{_FP_SAMPLE_MOD}",
+                lambda: corpus_fingerprint(docs, text_sample_mod=_FP_SAMPLE_MOD),
             ),
             "n_emb": int(n_emb if n_emb is not None else emb.count()),
         },

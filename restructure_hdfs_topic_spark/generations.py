@@ -322,7 +322,9 @@ def observation_get_bounded(obs, timeout_s: float = 120.0):
     Spark version, but version-sensitive.  Returns the metrics row-dict,
     or ``None`` on timeout/error — callers fall back to a read-back
     computation over the durable artifact, so a pruned observation can
-    degrade to one extra job but never to a hang or a wrong stat."""
+    degrade to one extra job but never to a hang or a wrong stat.  Both
+    fallbacks log a warning, so repeated degradation is visible."""
+    import logging
     import threading
 
     box: dict = {}
@@ -330,10 +332,21 @@ def observation_get_bounded(obs, timeout_s: float = 120.0):
     def _run() -> None:
         try:
             box["row"] = obs.get
-        except Exception:
-            pass
+        except Exception as exc:
+            box["error"] = exc
 
     t = threading.Thread(target=_run, daemon=True)
     t.start()
     t.join(timeout_s)
+    log = logging.getLogger(__name__)
+    if t.is_alive():
+        log.warning(
+            "Observation.get still blocked after %g s; falling back to a "
+            "read-back computation", timeout_s,
+        )
+    elif "error" in box:
+        log.warning(
+            "Observation.get failed (%r); falling back to a read-back "
+            "computation", box["error"],
+        )
     return box.get("row")

@@ -474,18 +474,20 @@ def _write_segment(
         # #3); the empty corpus's fingerprint is definitionally zeros.
         fp = {"fp_count": 0, "fp_xor_id": 0, "fp_xor_text": 0, "fp_mod": mod}
     else:
-        try:
-            row = fp_obs.get
+        from restructure_hdfs_topic_spark.generations import observation_get_bounded
+
+        row = observation_get_bounded(fp_obs)
+        if row is not None:
             fp = {
                 "fp_count": int(row["n"]),
                 "fp_xor_id": int(row["x_id"] or 0),
                 "fp_xor_text": int(row["x_text"] or 0),
                 "fp_mod": mod,
             }
-        except Exception:
-            # Defensive residue: data exists but the metric is unreadable
+        else:
+            # Data exists but the metric never fired or is unreadable
             # (shouldn't happen — the write that produced the files also
-            # fires the CollectMetrics node); fall back to the scan.
+            # fires the CollectMetrics node): bounded wait, then the scan.
             fp = corpus_fingerprint(
                 docs, id_col=id_col, text_col=text_col, text_sample_mod=mod
             )

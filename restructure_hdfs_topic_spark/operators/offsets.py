@@ -17,20 +17,35 @@ Reference semantics:
 
 Spark-first: the interval set is a DataFrame ``(topic, partition,
 offset_from, offset_to, last_processed)``; merge is the classic
-gaps-and-islands window aggregation (one shuffle on (topic, partition));
-seen filters are range anti-joins that Catalyst broadcasts when the state
-side is small (it always is: intervals per partition stay tiny because
-merging collapses contiguous ranges).
+gaps-and-islands window aggregation (one shuffle on (topic, partition)).
+Every committed version conforms to ``STATE_SCHEMA`` and is read with it,
+so a state read costs no footer-inference job.
+
+Seen filters come in two shapes, both O(log intervals) per probe over the
+same sorted per-(topic, partition) arrays:
+- file level (O4) is driver-side metadata work, like the reference's
+  in-heap ``OffsetRangeSet``: ``committed_intervals`` collects the state
+  once and ``committed_range_index`` answers the restructure prune and
+  the cleaner's +1 containment test without any further Spark job;
+- record level (O5) and the DataFrame form of the file filter
+  (``filter_unseen_records`` / ``filter_unseen_files``) broadcast the
+  index into a pandas UDF, for probe sides too large for the driver.
 """
 
 from __future__ import annotations
 
 import os
+from bisect import bisect_right
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 STATE_SCHEMA = "topic string, partition int, offset_from long, offset_to long, last_processed timestamp"
+# Read schema of a committed version: ``partition`` as BIGINT so versions
+# written before every commit was cast to STATE_SCHEMA (a BIGINT partition
+# column from a long-typed record table) still load — Parquet widens INT32
+# to BIGINT on read but cannot narrow; ``_read_state_at`` casts back.
+_STATE_READ_SCHEMA = STATE_SCHEMA.replace("partition int", "partition long")
 
 
 def merge_offset_intervals(ranges: DataFrame) -> DataFrame:
@@ -189,6 +204,98 @@ def _covering_interval(probes: DataFrame, state: DataFrame, pos_col: str) -> Dat
     )
 
 
+def committed_range_index(rows) -> "_RangeIndex":
+    """Driver-side index over a committed interval set, O(log intervals)
+    per probe: per (topic, partition) sorted interval starts with aligned
+    ends and ``last_processed`` micros, probed with ``bisect`` — replaces
+    the O(files × intervals) linear driver scan (VERDICT r4 #2: sf1
+    interval sets reach ~70k rows).  Committed state is merged (disjoint
+    per partition) at every commit, so the interval whose start is the
+    latest <= a position is the only one that can contain it.
+
+    ``rows``: iterable of (topic, partition, offset_from, offset_to[,
+    last_processed_us]) — ``committed_intervals`` yields the 5-tuple form.
+    The result is callable as ``contains(topic, partition, lo, hi)`` (some
+    interval covers [lo, hi] entirely — the cleaner's test) and answers
+    ``seen(...)``, the exact semantics of ``filter_unseen_files``.
+    """
+    return _RangeIndex(rows)
+
+
+class _RangeIndex:
+    __slots__ = ("_index",)
+
+    def __init__(self, rows):
+        by_tp: dict[tuple, list[tuple]] = {}
+        for t, p, lo, hi, *mt in rows:
+            by_tp.setdefault((t, p), []).append((lo, hi, mt[0] if mt else None))
+        self._index: dict[tuple, tuple[list, list, list]] = {}
+        for k, ivs in by_tp.items():
+            # Same order as ``_covering_interval``'s arrays (unknown mtime
+            # sorts as its sentinel), so duplicate starts resolve alike.
+            ivs.sort(key=lambda iv: (iv[0], iv[1], _MTIME_UNKNOWN_US if iv[2] is None else iv[2]))
+            self._index[k] = tuple(list(col) for col in zip(*ivs))
+
+    def covering(self, topic: str, partition: int, pos: int):
+        """``(offset_to, last_processed_us)`` of the committed interval
+        containing ``pos`` (``last_processed_us`` None when unknown), or
+        None when no interval contains it."""
+        arr = self._index.get((topic, partition))
+        if arr is None:
+            return None
+        froms, tos, mts = arr
+        i = bisect_right(froms, pos) - 1
+        if i < 0 or pos > tos[i]:
+            return None
+        return tos[i], mts[i]
+
+    def __call__(self, topic: str, partition: int, lo: int, hi: int) -> bool:
+        c = self.covering(topic, partition, lo)
+        return c is not None and hi <= c[0]
+
+    def seen(
+        self, topic: str, partition: int, lo: int, hi: int, mtime_us: int | None
+    ) -> bool:
+        """O4: [lo, hi] lies in one committed interval whose
+        ``last_processed`` is at or after the file's mtime.  An unknown
+        mtime on either side means reprocess, never skip."""
+        c = self.covering(topic, partition, lo)
+        return (
+            c is not None
+            and hi <= c[0]
+            and c[1] is not None
+            and mtime_us is not None
+            and mtime_us <= c[1]
+        )
+
+
+def committed_intervals(
+    spark: SparkSession, state_dir: str, topic: str | None = None
+) -> list[tuple]:
+    """The committed interval set (optionally one topic's) as driver rows
+    ``(topic, partition, offset_from, offset_to, last_processed_us)`` —
+    the input of ``committed_range_index``.  One Spark job (the collect;
+    the schema-pinned read infers nothing), none before the first commit.
+    ``last_processed_us`` is ``unix_micros(last_processed)``, the value
+    ``filter_unseen_files`` compares against."""
+    if _current_version(state_dir, spark) is None and _legacy_state(state_dir) is None:
+        return []
+    state = read_offsets(spark, state_dir)
+    if topic is not None:
+        state = state.filter(F.col("topic") == topic)
+    mtime_us = (
+        F.unix_micros("last_processed")
+        if "last_processed" in state.columns
+        else F.lit(None).cast("long")
+    )
+    return [
+        tuple(r)
+        for r in state.select(
+            "topic", "partition", "offset_from", "offset_to", mtime_us
+        ).collect()
+    ]
+
+
 def filter_unseen_files(manifest: DataFrame, state: DataFrame) -> DataFrame:
     """O4: drop manifest files whose [offset_from, offset_to] is fully
     contained in a committed interval with last_processed >= file mtime.
@@ -197,6 +304,9 @@ def filter_unseen_files(manifest: DataFrame, state: DataFrame) -> DataFrame:
     Broadcast interval-containment lookup (``_covering_interval``) — zero
     shuffle, no per-interval probing.  A NULL mtime comparison (unknown
     file mtime or uncommitted last_processed) means REPROCESS, never skip.
+    The jobs prune their driver-side file lists with the equivalent
+    ``committed_range_index(...).seen`` instead; this DataFrame form serves
+    manifests that live in Spark (the ``seen_file_filter`` query).
     """
     has_mtime = "last_processed" in state.columns and "mtime" in manifest.columns
     annotated = _covering_interval(manifest, state, "offset_from")
@@ -374,7 +484,7 @@ def commit_offsets(
                 )
             continue
         try:
-            return _replace_at(spark, state_dir, merged, nxt, token)
+            return _replace_at(spark, state_dir, merged, nxt, token, STATE_SCHEMA)
         except ClaimLost:
             # Our claim was TTL-broken while we were writing (stall) — the
             # peer's commit is durable; retry against the fresh snapshot.
@@ -482,7 +592,7 @@ def replace_offsets(spark: SparkSession, state_dir: str, state: DataFrame) -> Da
         token = _claim_version(spark, state_dir, nxt)
         if token:
             try:
-                return _replace_at(spark, state_dir, state, nxt, token)
+                return _replace_at(spark, state_dir, state, nxt, token, STATE_SCHEMA)
             except ClaimLost:
                 continue
         _break_stale_claim(spark, state_dir, nxt)
@@ -646,11 +756,16 @@ def _write_pointer(spark: SparkSession, state_dir: str, nxt: int) -> None:
 
 def _replace_at(
     spark: SparkSession, state_dir: str, state: DataFrame, nxt: int,
-    token: str | None = None,
+    token: str | None = None, schema: str | None = None,
 ) -> DataFrame:
     """Make ``state`` visible as version ``nxt``: write to a UNIQUE staging
     directory, re-verify claim ownership, rename staging into place, swap
-    the pointer, prune.
+    the pointer, prune.  Returns the state now current.
+
+    ``schema``: the lane's contract schema (``STATE_SCHEMA`` for offsets) —
+    ``state`` is cast to it before the write, so every version conforms,
+    and the read-back is pinned to it (no footer-inference job).  None
+    writes ``state`` as is and infers the read-back's schema.
 
     The staging + verify + rename sequence is what makes a broken claim
     actually LOSE: a committer stalled past the claim TTL (slow parquet
@@ -667,6 +782,8 @@ def _replace_at(
     suffix = token or _uuid.uuid4().hex
     staging = f"{state_dir}/offsets/.staging.v{nxt:08d}.{suffix}"
     version_dir = f"{state_dir}/offsets/v{nxt:08d}"
+    if schema is not None:
+        state = _conform(state, schema)
     state.write.mode("overwrite").parquet(staging)
 
     def _abort(reason: str) -> None:
@@ -734,7 +851,7 @@ def _replace_at(
         legacy = os.path.join(state_dir, "offsets.parquet")
         if os.path.exists(legacy):  # migration: drop pre-pointer layout
             shutil.rmtree(legacy, ignore_errors=True)
-        return read_offsets(spark, state_dir)
+        return _read_current(spark, state_dir, schema)
     # Remote store: write temp pointer object then rename.  The swap uses
     # FileContext.rename(..., Rename.OVERWRITE) where the store supports it
     # (single atomic metadata op on HDFS); the delete+rename fallback has a
@@ -770,7 +887,32 @@ def _replace_at(
             _staging_version(name) < nxt - 1
         ):
             fs.delete(st.getPath(), True)
-    return read_offsets(spark, state_dir)
+    return _read_current(spark, state_dir, schema)
+
+
+def _conform(state: DataFrame, schema: str) -> DataFrame:
+    """``state`` cast to the DDL ``schema``; a missing column becomes NULL
+    (for offsets: an unknown ``last_processed``, so covered files
+    reprocess)."""
+    from pyspark.sql.types import StructType
+
+    return state.select(
+        *[
+            (F.col(f.name) if f.name in state.columns else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in StructType.fromDDL(schema).fields
+        ]
+    )
+
+
+def _read_current(spark: SparkSession, state_dir: str, schema: str | None) -> DataFrame:
+    """The version ``offsets.CURRENT`` names, read with ``schema`` (inferred
+    when None)."""
+    reader = spark.read.schema(schema) if schema else spark.read
+    return reader.parquet(
+        f"{state_dir}/offsets/v{_current_version(state_dir, spark):08d}"
+    )
 
 
 def _clear_incomplete_version(spark: SparkSession, state_dir: str, nxt: int) -> None:
@@ -827,15 +969,29 @@ def read_offsets(spark: SparkSession, state_dir: str) -> DataFrame:
     return _read_state_at(spark, state_dir, _current_version(state_dir, spark))
 
 
+def _legacy_state(state_dir: str) -> str | None:
+    """Path of a pre-pointer ``offsets.parquet`` state, if present."""
+    legacy = os.path.join(state_dir, "offsets.parquet")
+    if "://" not in state_dir and os.path.exists(legacy):
+        return legacy
+    return None
+
+
 def _read_state_at(
     spark: SparkSession, state_dir: str, cur: int | None
 ) -> DataFrame:
     """State at an explicitly resolved version (so commit_offsets can pin
-    its merge snapshot to the same version it claims against)."""
+    its merge snapshot to the same version it claims against).  Versions
+    are read with a pinned schema — no footer-inference job; the legacy
+    layout predates the schema contract and keeps inference."""
     if cur is not None:
-        return spark.read.parquet(f"{state_dir}/offsets/v{cur:08d}")
-    legacy = os.path.join(state_dir, "offsets.parquet")
-    if "://" not in state_dir and os.path.exists(legacy):
+        return (
+            spark.read.schema(_STATE_READ_SCHEMA)
+            .parquet(f"{state_dir}/offsets/v{cur:08d}")
+            .withColumn("partition", F.col("partition").cast("int"))
+        )
+    legacy = _legacy_state(state_dir)
+    if legacy is not None:
         return spark.read.parquet(legacy)
     return spark.createDataFrame([], STATE_SCHEMA)
 

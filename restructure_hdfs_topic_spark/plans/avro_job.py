@@ -10,11 +10,14 @@ own integration fixtures
 (src/integrationTest/resources/*/partition=*/*.avro, golden output in
 RestructureS3IntegrationTest.kt).
 
-Scale shape: the ONLY driver-side state is the file listing (same as the
-reference's TopicFileList); committed files are pruned before any byte of
-data is read (the reference's scan-pruning, worker/RadarKafkaRestructure.kt:118-122);
-decode + organize + write is one distributed plan per topic with a single
-shuffle (the pre-write repartition on output partition columns).
+Scale shape: the driver holds the file listing and the topic's committed
+interval set, both metadata-scale — the reference's TopicFileList and
+in-heap OffsetRangeSet.  Committed files are pruned on the driver, before
+any byte of data is read (the reference's scan-pruning,
+worker/RadarKafkaRestructure.kt:118-122): one collect of the state, then
+a bisect index per file, so a poll that finds nothing new costs one Spark
+job.  Decode + organize + write is one distributed plan per topic with a
+single shuffle (the pre-write repartition on output partition columns).
 """
 
 from __future__ import annotations
@@ -30,8 +33,13 @@ from restructure_hdfs_topic_spark.functions.paths import sanitize_id
 from restructure_hdfs_topic_spark.functions.time import event_time, time_bin
 from restructure_hdfs_topic_spark.operators.dedup import keep_last_dedup
 from restructure_hdfs_topic_spark.operators.flatten import flatten_for_csv
-from restructure_hdfs_topic_spark.operators.offsets import (
+# ``filter_unseen_files`` is not called here (the file prune runs on the
+# driver index) but stays importable from this module: the benchmark's
+# tracer (perfbench/workloads.py) wraps it by name on this module.
+from restructure_hdfs_topic_spark.operators.offsets import (  # noqa: F401
     commit_offsets,
+    committed_intervals,
+    committed_range_index,
     filter_unseen_files,
     read_offsets,
 )
@@ -454,38 +462,28 @@ def _read_zip_target_times(
     ).distinct()
 
 
-def committed_range_index(rows) -> "callable":
-    """Containment test over a committed interval set, O(log intervals) per
-    probe: per (topic, partition) sorted interval starts + aligned ends,
-    probed with ``bisect`` — replaces the O(files × intervals) linear driver
-    scan (VERDICT r4 #2: sf1 interval sets reach ~70k rows, the same shape
-    that made the O4/O5 broadcast range join quadratic).  Committed state is
-    merged (disjoint per partition) at every commit, so the interval whose
-    start is the latest <= lo is the only one that can contain [lo, hi].
+def unseen_files(files: list[SourceFile], index) -> list[SourceFile]:
+    """O4 on the driver: the files ``committed_range_index(...).seen`` does
+    not cover — ``filter_unseen_files``' exact semantics.  A file's mtime in
+    micros is ``int(mtime_s * 1e6)``, which is what ``F.timestamp_seconds``
+    stores as the committed ``last_processed`` (``manifest_df`` builds the
+    commit ranges with it), so a committed file compares equal, never newer.
 
-    ``rows``: iterable of (topic, partition, offset_from, offset_to).
-    Returns ``contains(topic, partition, lo, hi) -> bool`` — true when some
-    interval covers [lo, hi] entirely.
-    """
-    from bisect import bisect_right
-
-    by_tp: dict[tuple, list[tuple[int, int]]] = {}
-    for t, p, lo, hi in rows:
-        by_tp.setdefault((t, p), []).append((lo, hi))
-    index: dict[tuple, tuple[list[int], list[int]]] = {}
-    for k, ivs in by_tp.items():
-        ivs.sort()
-        index[k] = ([iv[0] for iv in ivs], [iv[1] for iv in ivs])
-
-    def contains(topic: str, partition: int, lo: int, hi: int) -> bool:
-        arr = index.get((topic, partition))
-        if arr is None:
-            return False
-        froms, tos = arr
-        i = bisect_right(froms, lo) - 1
-        return i >= 0 and hi <= tos[i]
-
-    return contains
+    Sorted NUMERICALLY by (partition, offset) so the maxFilesPerTopic cap
+    always takes the EARLIEST pending files, like the reference's ordered
+    walk + take (lexicographic path order would put `+10000.avro` before
+    `+9000.avro`, inverting keep-last-by-offset across iterations)."""
+    return sorted(
+        (
+            f
+            for f in files
+            if not index.seen(
+                f.topic, f.partition, f.offset_from, f.offset_to,
+                int(f.mtime * 1_000_000),
+            )
+        ),
+        key=lambda f: (f.partition, f.offset_from, f.path),
+    )
 
 
 def run_avro_cleaner_job(
@@ -503,7 +501,6 @@ def run_avro_cleaner_job(
     (accountant.remove) so the next restructure reprocesses them.
     """
     from restructure_hdfs_topic_spark.operators.offsets import (
-        read_offsets,
         remove_offsets,
         replace_offsets,
     )
@@ -520,11 +517,7 @@ def run_avro_cleaner_job(
     }
     topics = walk_topics(input_root, exclude=excluded, spark=spark)
     counters: dict = {"deleted": [], "rolled_back": [], "kept": [], "locked": []}
-    state = read_offsets(spark, config.state_dir)
-    contains = committed_range_index(
-        (r["topic"], r["partition"], r["offset_from"], r["offset_to"])
-        for r in state.collect()
-    )
+    contains = committed_range_index(committed_intervals(spark, config.state_dir))
 
     def committed(f: SourceFile) -> bool:
         # +1 trick (SourceDataCleaner.kt:86-91).
@@ -692,17 +685,10 @@ def _process_topic(spark, topic, aged, config, mode, counters) -> None:
     from restructure_hdfs_topic_spark.progress import timer
 
     with timer.time("restructure.readOffsets"):
-        state = read_offsets(spark, config.state_dir)
-    manifest = manifest_df(spark, aged)
-    # Join output order is nondeterministic — sort NUMERICALLY by
-    # (partition, offset) so the maxFilesPerTopic cap always takes the
-    # EARLIEST pending files, like the reference's ordered walk + take
-    # (lexicographic path order would put `+10000.avro` before
-    # `+9000.avro`, inverting keep-last-by-offset across iterations).
-    all_pending = sorted(
-        filter_unseen_files(manifest, state).collect(),
-        key=lambda r: (r["partition"], r["offset_from"], r["path"]),
-    )
+        index = committed_range_index(
+            committed_intervals(spark, config.state_dir, topic)
+        )
+    all_pending = unseen_files(aged, index)
     pending_rows = all_pending
     if config.worker.max_files_per_topic:
         pending_rows = all_pending[: config.worker.max_files_per_topic]
@@ -714,7 +700,7 @@ def _process_topic(spark, topic, aged, config, mode, counters) -> None:
             "files_pending": 0,
         }
         return
-    paths = [r["path"] for r in pending_rows]
+    paths = [f.path for f in pending_rows]
     with timer.time("restructure.readAvro"):
         records = read_avro(spark, paths, mode=mode)
     organized = organize_avro_records(records, config.paths.bin_format)
@@ -743,12 +729,9 @@ def _process_topic(spark, topic, aged, config, mode, counters) -> None:
     with timer.time("restructure.write"):
         _write_topic(organized, config, topic)
     n_records = int(obs.get["n"])
-    new_ranges = spark.createDataFrame(
-        [
-            (r["topic"], r["partition"], r["offset_from"], r["offset_to"], r["mtime"])
-            for r in pending_rows
-        ],
-        "topic string, partition int, offset_from long, offset_to long, last_processed timestamp",
+    new_ranges = manifest_df(spark, pending_rows).select(
+        "topic", "partition", "offset_from", "offset_to",
+        F.col("mtime").alias("last_processed"),
     )
     with timer.time("restructure.commitOffsets"):
         commit_offsets(spark, config.state_dir, new_ranges)

@@ -7,7 +7,7 @@ Exactly-once across reruns (SURVEY §7.3 hard-part 1): the offsets state
 is recomputed as ONE merged interval aggregation and overwritten
 atomically AFTER the data write action succeeds (commit-after-store,
 mirroring worker/FileCache.kt:128-158 ordering).  A rerun sees the
-committed intervals, the manifest anti-join drops every processed file,
+committed intervals, the driver-side prune drops every processed file,
 and the job writes nothing — idempotence is a property of the plan, not
 of locks.  (The reference needs Redis locks because N independent JVMs
 race; one Spark app owns the whole plan, so a single deployment needs no
@@ -27,8 +27,8 @@ from restructure_hdfs_topic_spark.config import RestructureConfig
 from restructure_hdfs_topic_spark.operators.dedup import keep_last_dedup
 from restructure_hdfs_topic_spark.operators.offsets import (
     commit_offsets,
-    filter_unseen_files,
-    read_offsets,
+    committed_intervals,
+    committed_range_index,
 )
 from restructure_hdfs_topic_spark.plans.restructure import (
     restructure_records,
@@ -69,17 +69,24 @@ def run_restructure_job(
     """
     from pyspark.sql import Observation
 
-    manifest = build_manifest(records)
-    state = read_offsets(spark, config.state_dir)
-    # The pending-file list is manifest-granularity — one row per source
-    # file, exactly what the reference holds in memory as TopicFileList
+    # The manifest is file-granularity — one row per source file, exactly
+    # what the reference holds in memory as TopicFileList
     # (source/TopicFileList.kt:7-12) — so collecting it to the driver is
-    # bounded and gives us the broadcast join side, the pending count, AND
-    # the commit ranges without ever re-evaluating the plan.
-    pending = filter_unseen_files(manifest, state).collect()
+    # bounded, and the O4 prune runs there on the committed interval
+    # index.  The pending rows are the broadcast join side, the pending
+    # count AND the commit ranges, without re-evaluating the plan.  Mtimes
+    # travel as unix micros, the value the prune compares, so the
+    # committed ``last_processed`` never round-trips through a Python
+    # datetime.
+    manifest = build_manifest(records).select(
+        "topic", "partition", "offset_from", "offset_to",
+        F.unix_micros("mtime").alias("mtime_us"),
+    )
+    index = committed_range_index(committed_intervals(spark, config.state_dir))
+    pending = [r for r in manifest.collect() if not index.seen(*r)]
     if not pending:
         return {"records_written": 0, "files_pending": 0}
-    todo_files = spark.createDataFrame(pending)
+    todo_files = spark.createDataFrame(pending, manifest.schema)
 
     # Record-level pruning piggybacks on the file decision (the reference's
     # per-record binary search is a no-op when file granularity suffices —
@@ -135,7 +142,7 @@ def run_restructure_job(
     # wrongly mark gap offsets between pending files as processed.
     new_ranges = todo_files.select(
         "topic", "partition", "offset_from", "offset_to",
-        F.col("mtime").alias("last_processed"),
+        F.timestamp_micros("mtime_us").alias("last_processed"),
     )
     commit_offsets(spark, config.state_dir, new_ranges)
     return {"records_written": n_records, "files_pending": len(pending)}
